@@ -1,7 +1,7 @@
 package graft
 
 import graft.plans._
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -16,27 +16,26 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * (GraftSession sets this; any vanilla SparkSession builder or
   * spark-submit conf can too.) It injects:
   *
-  *  - the native codegen'd scalar functions (`simhash64`, `cosine_sim`,
-  *    `minhash_bands`, `word_shingles`) into the session's function
-  *    registry, so plain SQL — `spark.sql("SELECT cosine_sim(a, b)")` —
-  *    and every downstream tool sees them without per-session
-  *    `register()` calls;
+  *  - every native codegen'd function in [[GraftExtensions.functions]]
+  *    (`simhash64`, `cosine_sim`, `dot_product`, `minhash_bands`,
+  *    `word_shingles`, `count_in_set`, `hyperplane_sig`, `zorder2`,
+  *    `top_gram_mass`, `jaro_winkler`, `unicode_normalize`,
+  *    `html_extract`) into the session's function registry, so plain
+  *    SQL — `spark.sql("SELECT cosine_sim(a, b)")` — and the Column APIs
+  *    on the expression companions resolve them;
   *  - [[graft.plans.RangeJoinRule]] into the operator-optimization batch,
   *    lowering point-in-interval joins written in SQL to bucketed
-  *    equi-joins (opt-in via `spark.graft.rangeJoin.bucketWidth`).
+  *    equi-joins (opt-in via `spark.graft.rangeJoin.bucketWidth`);
+  *  - [[graft.plans.AsofJoinStrategy]] into the planner, which plans
+  *    as-of joins as `AsofJoinExec`.
   *
-  * The per-expression `register()` helpers remain for sessions built
-  * without extensions (they no-op when the function already exists).
+  * A session built without the extension gets the same functions from
+  * [[GraftExtensions.register]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach { case (name, usage, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, name, usage),
-        builder))
-    }
+    GraftExtensions.registryEntries.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => RangeJoinRule)
     ext.injectPlannerStrategy(_ => AsofJoinStrategy)
   }
@@ -61,6 +60,24 @@ object GraftExtensions {
       case other => fail(s"${e.dataType.simpleString} value $other")
     }
   }
+
+  /** Registers every function of [[functions]] that `spark`'s registry
+    * lacks — for sessions built without `spark.sql.extensions`.
+    * Idempotent: names already present are left alone. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    registryEntries.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
+  }
+
+  /** [[functions]] in the registry's (identifier, info, builder) form. */
+  private def registryEntries
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    functions.map { case (name, usage, builder) =>
+      (FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name, usage), builder)
+    }
 
   /** (name, usage, builder) for every native graft function. */
   val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(

@@ -151,8 +151,7 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, minContainment: Double = 0.5,
-      maxGramDf: Int = 0, hashGrams: Boolean = false,
-      mapSidePairs: Boolean = true): DataFrame = {
+      maxGramDf: Int = 0, hashGrams: Boolean = false): DataFrame = {
     val sh = docs.select(col(idCol).as("doc_id"),
       wordShingles(col(textCol), shingleN).as("sh"))
     val sizes = sh.select(col("doc_id"), size(col("sh")).as("sz"))
@@ -170,23 +169,17 @@ object Dedup {
           .filter(col("df") > maxGramDf).select("g")
         inv0.join(hot, Seq("g"), "left_anti")
       } else inv0
-    // pair generation (r16→r17 history): the inverted-index SELF-JOIN
-    // (exchange reused across both sides, SMJ merge, partial hash-agg)
-    // was the r2-r16 shape; a gram-keyed collect_list + combination-
-    // explode rewrite measured parity-to-worse (r16: 2.98→3.03 min,
-    // 3.22→3.40 med). r17 implements the remaining unexplored variant
-    // (r16 verdict #4): MAP-SIDE pair emission below the exchange — one
-    // gram exchange, ONE (g, id) sort, and a partition-local run-walk
-    // that emits each gram's id-buffer combinations directly, skipping
-    // the second sort and the SMJ merge machinery entirely. ids are
-    // sorted within the run so a < b holds by construction; counts are
-    // exact (keyed on the true gram, no collision exposure). The walk
-    // buffers ONE gram's ids at a time — bounded by the df cap when
-    // maxGramDf > 0; the uncapped regime has the same Σdf² exposure the
-    // join had (a single hot gram simply arrives as one long run).
-    // Hashed-gram (long-key) path only; the string path keeps the join.
+    // pair generation. Hashed grams (long keys): MAP-SIDE pair emission
+    // below the exchange — one gram exchange, ONE (g, id) sort, and a
+    // partition-local run-walk that emits each gram's id-buffer
+    // combinations directly, with no second sort and no SMJ merge. ids
+    // are sorted within the run so a < b holds by construction; counts
+    // are exact. The walk buffers ONE gram's ids at a time — bounded by
+    // the df cap when maxGramDf > 0; the uncapped regime has the same
+    // Σdf² exposure a self-join has (a hot gram arrives as one long run).
+    // String grams keep the inverted-index self-join.
     val pairCounts: DataFrame =
-      if (hashGrams && mapSidePairs) {
+      if (hashGrams) {
         val spark = docs.sparkSession
         import spark.implicits._
         inv.select(col("g"), col("doc_id"))
@@ -1377,14 +1370,9 @@ object Dedup {
   }
 
   /** SimHash as a native codegen'd Catalyst expression
-    * (graft.plans.SimHash64Expression) over the whitespace tokens.
-    * Registered on the active session (idempotent) and invoked through
-    * the function registry — no private Column internals needed. */
-  def simhash(c: Column): Column = {
-    graft.plans.SimHash64Expression.register(
-      org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function("simhash64", split(c, " "))
-  }
+    * (graft.plans.SimHash64Expression) over the whitespace tokens. */
+  def simhash(c: Column): Column =
+    graft.plans.SimHash64Expression.simhash64(split(c, " "))
 
   /** Hamming distance between two 64-bit signatures (native, codegen'd). */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

@@ -2,17 +2,24 @@ package graft.examples
 
 import java.nio.file.{Files, Paths}
 
-/** Scratch: dump `.explain("formatted")` of named gate queries to files
-  * (plans/r16/<query>_<tag>.txt) — the optimization-round evidence trail.
-  * Usage: runMain graft.examples.PlanDump <q1,q2,...> <tag> [sfDir] [outDir]
+/** The plan-dump tool: writes `.explain("formatted")` of named gate
+  * queries to `<outDir>/<query>_<tag>.txt`, the before/after evidence for
+  * a plan-changing claim. Every argument is required, so a dump never
+  * lands on a committed file by default.
+  * Usage: runMain graft.examples.PlanDump <q1,q2,...> <tag> <sfDir> <outDir>
+  *
+  * Without `SPARK_GRAFT_CPUS` the session is `local[n]` with n shuffle
+  * partitions, n = available processors — the sizing perfbench runs its
+  * queries under, so a dump shows the plan the benchmark executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val qs = args(0).split(",").map(_.trim).filter(_.nonEmpty)
-    val tag = if (args.length > 1) args(1) else "before"
-    val d = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val out = if (args.length > 3) args(3) else "plans/r16"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    require(args.length == 4,
+      "usage: PlanDump <q1,q2,...> <tag> <sfDir> <outDir>")
+    val Array(qList, tag, d, out) = args
+    val qs = qList.split(",").map(_.trim).filter(_.nonEmpty)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(out))

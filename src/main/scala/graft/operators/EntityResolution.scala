@@ -148,7 +148,6 @@ object EntityResolution {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold=$threshold outside (0,1]")
     require(maxBlock >= 0, s"maxBlock=$maxBlock must be >= 0")
-    JaroWinklerExpression.register(df.sparkSession)
     val base = df.select(col(idCol).as("id"), col(nameCol).as("name"),
       col(blockCol).as("block"))
     val census = base.groupBy(col("block")).agg(count(lit(1)).as("n"))

@@ -570,7 +570,6 @@ object PipelineQueries {
     // reproduce our output char-for-char (md5), and the combining-mark
     // census must drop to zero after composition. ----------------------
     "t30_unicode_nfc" -> ((s, d) => {
-      graft.plans.UnicodeNormalizeExpression.register(s)
       import graft.plans.UnicodeNormalizeExpression.unicodeNormalize
       val dec = concat(substring(col("text"), 1, 40),
         lit(" cafe\u0301 A\u030A \uFB01")) // decomposed acute+ring; FB01 ligature

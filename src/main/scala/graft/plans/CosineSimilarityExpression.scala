@@ -115,18 +115,7 @@ case class CosineSimilarityExpression(left: Expression, right: Expression)
 
 object CosineSimilarityExpression {
 
-  /** SQL + Column registration: SELECT cosine_sim(a.embedding, b.embedding).
-    * No-op when GraftExtensions already injected the function. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "cosine_sim", exprs => CosineSimilarityExpression(exprs(0), exprs(1)),
-        "built-in")
-
-  /** Column API (registers on the active session, idempotent). */
-  def cosineSim(a: Column, b: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
+  /** Column API (the function comes from [[graft.GraftExtensions]]). */
+  def cosineSim(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("cosine_sim", a, b)
-  }
 }

@@ -78,19 +78,9 @@ object CountInSetExpression {
     CountInSetExpression(exprs(0), words)
   }
 
-  /** SQL + Column registration. No-op when GraftExtensions already
-    * injected the function. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("count_in_set")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "count_in_set", builder, "built-in")
-
-  /** Column API (registers on the active session, idempotent). */
-  def countInSet(tokens: Column, words: Seq[String]): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
+  /** Column API (the function comes from [[graft.GraftExtensions]]). */
+  def countInSet(tokens: Column, words: Seq[String]): Column =
     org.apache.spark.sql.functions.call_function("count_in_set", tokens,
       org.apache.spark.sql.functions.array(
         words.map(org.apache.spark.sql.functions.lit): _*))
-  }
 }

@@ -87,18 +87,7 @@ case class DotProductExpression(left: Expression, right: Expression)
 
 object DotProductExpression {
 
-  /** SQL + Column registration: SELECT dot_product(a.embedding, b.embedding).
-    * No-op when GraftExtensions already injected the function. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "dot_product", exprs => DotProductExpression(exprs(0), exprs(1)),
-        "built-in")
-
-  /** Column API (registers on the active session, idempotent). */
-  def dot(a: Column, b: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
+  /** Column API (the function comes from [[graft.GraftExtensions]]). */
+  def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("dot_product", a, b)
-  }
 }

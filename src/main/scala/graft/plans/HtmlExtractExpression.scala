@@ -327,7 +327,7 @@ case class HtmlExtractExpression(child: Expression, minChars: Int)
 
 object HtmlExtractExpression {
 
-  /** ONE builder for every registration surface. */
+  /** The [[graft.GraftExtensions]] builder. */
   def build(exprs: Seq[Expression]): HtmlExtractExpression = {
     require(exprs.length == 2, "html_extract(html, minChars) takes 2 arguments")
     val child = exprs.head match {
@@ -339,15 +339,7 @@ object HtmlExtractExpression {
       graft.GraftExtensions.literalInt(exprs, 1, "html_extract"))
   }
 
-  /** SQL registration: SELECT html_extract(html, 25).
-    * No-op when GraftExtensions already injected the function. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("html_extract")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "html_extract", build, "built-in")
-
-  /** Column API (extension-injected in GraftSession sessions). */
+  /** Column API (the function comes from [[graft.GraftExtensions]]). */
   def htmlExtract(c: Column, minChars: Int): Column = {
     import org.apache.spark.sql.functions.{call_function, lit}
     call_function("html_extract", c, lit(minChars))

@@ -108,21 +108,8 @@ object HyperplaneSignatureExpression {
     (h >>> 11) * 1.1102230246251565e-16 * 2.0 - 1.0
   }
 
-  /** SQL + Column registration: SELECT hyperplane_sig(embedding, 16).
-    * No-op when GraftExtensions already injected the function. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("hyperplane_sig")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "hyperplane_sig",
-        exprs => HyperplaneSignatureExpression(
-          exprs(0), graft.GraftExtensions.literalInt(exprs, 1, "hyperplane_sig")),
-        "built-in")
-
-  /** Column API (registers on the active session, idempotent). */
-  def hyperplaneSig(vec: Column, nBits: Int): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
+  /** Column API (the function comes from [[graft.GraftExtensions]]). */
+  def hyperplaneSig(vec: Column, nBits: Int): Column =
     org.apache.spark.sql.functions.call_function("hyperplane_sig", vec,
       org.apache.spark.sql.functions.lit(nBits))
-  }
 }

@@ -156,16 +156,7 @@ case class JaroWinklerExpression(left: Expression, right: Expression)
 
 object JaroWinklerExpression {
 
-  /** SQL + Column registration: SELECT jaro_winkler(a, b).
-    * No-op when GraftExtensions already injected the function. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("jaro_winkler")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "jaro_winkler", exprs => JaroWinklerExpression(exprs(0), exprs(1)),
-        "built-in")
-
-  /** Column API (requires register(spark) once per session). */
+  /** Column API (the function comes from [[graft.GraftExtensions]]). */
   def jaroWinkler(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("jaro_winkler", a, b)
 }

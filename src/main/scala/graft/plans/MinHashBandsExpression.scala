@@ -137,23 +137,8 @@ case class MinHashBandsExpression(child: Expression, k: Int, bands: Int)
 
 object MinHashBandsExpression {
 
-  /** SQL + Column registration:
-    * SELECT minhash_bands(shingles, 64, 16) — k and bands must be
-    * literal ints (they shape the generated code). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_bands")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_bands", exprs => MinHashBandsExpression(
-          exprs(0),
-          graft.GraftExtensions.literalInt(exprs, 1, "minhash_bands"),
-          graft.GraftExtensions.literalInt(exprs, 2, "minhash_bands")),
-        "built-in")
-
-  /** Column API (registers on the active session, idempotent). */
-  def minhashBands(shingles: Column, k: Int, bands: Int): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
+  /** Column API (the function comes from [[graft.GraftExtensions]]). */
+  def minhashBands(shingles: Column, k: Int, bands: Int): Column =
     org.apache.spark.sql.functions.call_function("minhash_bands", shingles,
       org.apache.spark.sql.functions.lit(k), org.apache.spark.sql.functions.lit(bands))
-  }
 }

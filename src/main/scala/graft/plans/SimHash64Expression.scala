@@ -89,15 +89,7 @@ case class SimHash64Expression(child: Expression) extends UnaryExpression {
 
 object SimHash64Expression {
 
-  /** SQL + Column registration: SELECT simhash64(split(text, ' ')).
-    * No-op when GraftExtensions already injected the function. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "simhash64", exprs => SimHash64Expression(exprs.head), "built-in")
-
-  /** Column API (requires register(spark) once per session). */
+  /** Column API (the function comes from [[graft.GraftExtensions]]). */
   def simhash64(tokens: Column): Column =
     org.apache.spark.sql.functions.call_function("simhash64", tokens)
 }

@@ -89,20 +89,8 @@ object TopGramMassExpression {
     best
   }
 
-  /** SQL + Column registration: SELECT top_gram_mass(split(text,' '), 2).
-    * No-op when GraftExtensions already injected the function. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("top_gram_mass")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "top_gram_mass", exprs => TopGramMassExpression(
-          exprs(0), graft.GraftExtensions.literalInt(exprs, 1, "top_gram_mass")),
-        "built-in")
-
-  /** Column API (registers on the active session, idempotent). */
-  def topGramMass(tokens: Column, n: Int): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
+  /** Column API (the function comes from [[graft.GraftExtensions]]). */
+  def topGramMass(tokens: Column, n: Int): Column =
     org.apache.spark.sql.functions.call_function("top_gram_mass", tokens,
       org.apache.spark.sql.functions.lit(n))
-  }
 }

@@ -106,10 +106,9 @@ case class UnicodeNormalizeExpression(child: Expression, form: String)
 
 object UnicodeNormalizeExpression {
 
-  /** ONE builder for every registration surface (temp function here,
-    * GraftExtensions injection): checks arity and extracts the literal
-    * form — the form selects the kernel at plan time, so it cannot be a
-    * column. */
+  /** The [[graft.GraftExtensions]] builder: checks arity and extracts
+    * the literal form — the form selects the kernel at plan time, so it
+    * cannot be a column. */
   def build(exprs: Seq[Expression]): UnicodeNormalizeExpression = {
     require(exprs.length == 2, "unicode_normalize(str, form) takes 2 arguments")
     val form = exprs(1) match {
@@ -128,14 +127,7 @@ object UnicodeNormalizeExpression {
     UnicodeNormalizeExpression(child, form)
   }
 
-  /** SQL registration: SELECT unicode_normalize(s, 'NFC'). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("unicode_normalize")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "unicode_normalize", build, "built-in")
-
-  /** Column API (requires register(spark) once per session). */
+  /** Column API (the function comes from [[graft.GraftExtensions]]). */
   def unicodeNormalize(c: Column, form: String): Column = {
     import org.apache.spark.sql.functions.{call_function, lit}
     call_function("unicode_normalize", c, lit(form))

@@ -93,20 +93,8 @@ object WordShinglesExpression {
     new GenericArrayData(seen.toArray())
   }
 
-  /** SQL + Column registration: SELECT word_shingles(split(text,' '), 3).
-    * No-op when GraftExtensions already injected the function. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("word_shingles")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "word_shingles", exprs => WordShinglesExpression(
-          exprs(0), graft.GraftExtensions.literalInt(exprs, 1, "word_shingles")),
-        "built-in")
-
-  /** Column API (registers on the active session, idempotent). */
-  def wordShingles(tokens: Column, n: Int): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
+  /** Column API (the function comes from [[graft.GraftExtensions]]). */
+  def wordShingles(tokens: Column, n: Int): Column =
     org.apache.spark.sql.functions.call_function("word_shingles", tokens,
       org.apache.spark.sql.functions.lit(n))
-  }
 }

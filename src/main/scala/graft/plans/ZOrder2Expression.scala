@@ -87,15 +87,7 @@ case class ZOrder2Expression(left: Expression, right: Expression)
 
 object ZOrder2Expression {
 
-  /** SQL + Column registration: SELECT zorder2(a, b).
-    * No-op when GraftExtensions already injected the function. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("zorder2")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "zorder2", exprs => ZOrder2Expression(exprs(0), exprs(1)), "built-in")
-
-  /** Column API (requires register(spark) once per session). */
+  /** Column API (the function comes from [[graft.GraftExtensions]]). */
   def zorder2(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("zorder2", a, b)
 }

@@ -1,11 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftExtensions wiring: SQL-visible native functions without manual
-  * register(), and the RangeJoinRule rewrite of non-equi interval joins. */
+/** GraftExtensions wiring: SQL-visible native functions, the
+  * `GraftExtensions.register` fallback for sessions built without the
+  * extension, and the RangeJoinRule rewrite of non-equi interval joins. */
 class ExtensionsSpec extends AnyFunSuite with CacheHygiene {
 
   // OWN session (see BucketingSpec): this suite sets the RangeJoinRule
@@ -19,15 +21,56 @@ class ExtensionsSpec extends AnyFunSuite with CacheHygiene {
   import spark.implicits._
 
   test("extensions inject all native functions into plain SQL") {
+    val calls = Map(
+      "simhash64" -> "simhash64(split('a b c', ' '))",
+      "cosine_sim" -> "cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F))",
+      "dot_product" -> "dot_product(array(1.0F, 2.0F), array(3.0F, 4.0F))",
+      "minhash_bands" -> "minhash_bands(array('x', 'y'), 64, 16)",
+      "word_shingles" -> "word_shingles(split('a b c d', ' '), 3)",
+      "count_in_set" -> "count_in_set(split('the cat the', ' '), array('the'))",
+      "hyperplane_sig" -> "hyperplane_sig(array(1.0F, 0.5F), 16)",
+      "zorder2" -> "zorder2(CAST(3 AS BIGINT), CAST(5 AS BIGINT))",
+      "top_gram_mass" -> "top_gram_mass(split('ab ab ab cd', ' '), 2)",
+      "jaro_winkler" -> "jaro_winkler('abc', 'abc')",
+      "unicode_normalize" -> "unicode_normalize('e\u0301', 'NFC')",
+      "html_extract" -> "html_extract('<p>plain main content text here</p>', 5)")
+    // a function added to the table without a call here fails this test
+    assert(calls.keySet == GraftExtensions.functions.map(_._1).toSet)
+    val names = calls.keys.toSeq.sorted
     val r = spark.sql(
-      """SELECT simhash64(split('a b c', ' ')) AS sh,
-        |  cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS cs,
-        |  size(minhash_bands(array('x', 'y'), 64, 16)) AS mb,
-        |  word_shingles(split('a b c d', ' '), 3) AS ws""".stripMargin).head()
+      names.map(n => s"${calls(n)} AS $n").mkString("SELECT ", ", ", "")).head()
+    names.zipWithIndex.foreach { case (n, i) => assert(!r.isNullAt(i), s"$n is null") }
+    assert(r.getAs[Double]("cosine_sim") == 1.0)
+    assert(r.getAs[Double]("dot_product") == 11.0)
+    assert(r.getSeq[Long](r.fieldIndex("minhash_bands")).size == 16)
+    assert(r.getSeq[String](r.fieldIndex("word_shingles")) == Seq("a b c", "b c d"))
+    assert(r.getAs[Int]("count_in_set") == 2)
+    assert(r.getAs[Long]("zorder2") == graft.plans.ZOrder.interleave(3L, 5L))
+    assert(r.getAs[Long]("top_gram_mass") == 10L)
+    assert(r.getAs[Double]("jaro_winkler") == 1.0)
+    assert(r.getAs[String]("unicode_normalize") == "\u00e9")
+  }
+
+  test("GraftExtensions.register restores missing functions, then is a no-op") {
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    val dropped = Seq("simhash64", "jaro_winkler").map(FunctionIdentifier(_))
+    dropped.foreach(id => assert(registry.dropFunction(id)))
+    intercept[AnalysisException](s.sql("SELECT jaro_winkler('a', 'b')"))
+
+    GraftExtensions.register(s)
+    val r = s.sql("SELECT simhash64(split('a b c', ' ')), jaro_winkler('abc', 'abc')").head()
     assert(!r.isNullAt(0))
     assert(r.getDouble(1) == 1.0)
-    assert(r.getInt(2) == 16)
-    assert(r.getSeq[String](3) == Seq("a b c", "b c d"))
+    assert(r.getLong(0) ==
+      spark.sql("SELECT simhash64(split('a b c', ' '))").head().getLong(0))
+
+    // a second call registers nothing: every entry keeps its ExpressionInfo
+    def infos = GraftExtensions.functions.map(f =>
+      registry.lookupFunction(FunctionIdentifier(f._1)).get)
+    val before = infos
+    GraftExtensions.register(s)
+    assert(before.zip(infos).forall { case (a, b) => a eq b })
   }
 
   private def physical(df: org.apache.spark.sql.DataFrame): String =

@@ -34,7 +34,6 @@ class MaintenanceSpec extends AnyFunSuite with CacheHygiene {
   }
 
   test("zorder2 expression: codegen equals interpreted equals helper") {
-    graft.plans.ZOrder2Expression.register(spark)
     val df = Seq((3L, 5L), (0L, 0L), (123456789L, 987654321L), (-1L, 7L))
       .toDF("a", "b")
     val got = df.selectExpr("zorder2(a, b) AS z").as[Long].collect()

@@ -29,7 +29,6 @@ class PlanExprSpec extends AnyFunSuite with CacheHygiene {
   test("simhash64 runs inside whole-stage codegen (doGenCode path)") {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      SimHash64Expression.register(spark)
       val df = spark.range(0, 1000)
         .selectExpr("simhash64(split(concat('tok', id % 50, ' tok', id % 7), ' ')) AS h")
       val cg = df.queryExecution.explainString(org.apache.spark.sql.execution.CodegenMode)
@@ -45,7 +44,6 @@ class PlanExprSpec extends AnyFunSuite with CacheHygiene {
   }
 
   test("simhash64 via SQL after registration; null array -> null") {
-    SimHash64Expression.register(spark)
     val r = spark.sql(
       "SELECT simhash64(split('a b c', ' ')), simhash64(CAST(NULL AS ARRAY<STRING>))").head()
     assert(!r.isNullAt(0))
@@ -88,7 +86,6 @@ class PlanExprSpec extends AnyFunSuite with CacheHygiene {
         java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
     }
     // null semantics mirror cosine_sim
-    graft.plans.DotProductExpression.register(spark)
     val n = spark.sql(
       """SELECT dot_product(CAST(NULL AS ARRAY<FLOAT>), array(1.0F)),
         | dot_product(array(1.0F, 2.0F), array(1.0F)),
@@ -99,7 +96,6 @@ class PlanExprSpec extends AnyFunSuite with CacheHygiene {
   }
 
   test("cosine_sim null semantics: null array, length mismatch, null element") {
-    graft.plans.CosineSimilarityExpression.register(spark)
     val r = spark.sql(
       """SELECT
         | cosine_sim(CAST(NULL AS ARRAY<FLOAT>), array(1.0F)),
@@ -178,7 +174,6 @@ class PlanExprSpec extends AnyFunSuite with CacheHygiene {
       assert(interp.sameElements(cgOff))
     } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
     // null array -> null; non-literal nBits -> clear AnalysisException
-    graft.plans.HyperplaneSignatureExpression.register(spark)
     val r = spark.sql("SELECT hyperplane_sig(CAST(NULL AS ARRAY<FLOAT>), 16)").head()
     assert(r.isNullAt(0))
     val err = intercept[org.apache.spark.sql.AnalysisException] {
@@ -217,7 +212,6 @@ class PlanExprSpec extends AnyFunSuite with CacheHygiene {
   }
 
   test("top_gram_mass: codegen == interpreted, hand goldens, null/short input") {
-    graft.plans.TopGramMassExpression.register(spark)
     // "ab ab ab cd": 'ab ab' x2, 5 chars -> 10; no trigram repeats -> 0
     val r = spark.sql(
       """SELECT top_gram_mass(split('ab ab ab cd', ' '), 2),
@@ -237,7 +231,6 @@ class PlanExprSpec extends AnyFunSuite with CacheHygiene {
   }
 
   test("jaro_winkler: DuckDB-pinned goldens, null semantics, symmetry") {
-    graft.plans.JaroWinklerExpression.register(spark)
     // goldens produced by DuckDB jaro_winkler_similarity (1.0.0) — the
     // d22 oracle's engine; pins greedy matching, integer-floor
     // transpositions, and the 0.7 Winkler boost threshold
@@ -284,7 +277,6 @@ class PlanExprSpec extends AnyFunSuite with CacheHygiene {
   }
 
   test("jaro_winkler: codegen == interpreted on generated pairs") {
-    graft.plans.JaroWinklerExpression.register(spark)
     val df = spark.range(0, 2000).selectExpr(
       "jaro_winkler(concat('name', id % 97, 'x', id % 13), " +
         "concat('name', id % 89, 'y', id % 7)) AS s")
@@ -335,7 +327,6 @@ class PlanExprSpec extends AnyFunSuite with CacheHygiene {
   test("unicode_normalize: goldens, forms, ASCII fast path, codegen parity") {
     import org.apache.spark.unsafe.types.UTF8String
     import graft.plans.UnicodeNormalize
-    graft.plans.UnicodeNormalizeExpression.register(spark)
     def nfc(s: String): String =
       UnicodeNormalize.normalize(UTF8String.fromString(s), 1).toString
     // composition goldens: combining sequences fold to composed forms
